@@ -18,8 +18,9 @@ way our mode column gates extractor branches):
 
 No per-row Python UDFs: the physical plan contains a single MapInPandas
 node; everything else (filters, assembly, sinks) is JVM-side. Within each
-Arrow batch, rows are grouped by mode and processed with pandas; the
-per-payload work is the same string algebra the reference runs per page.
+Arrow batch, ``extract_batch`` runs a flat per-row loop, dispatching each
+row on its own ``tool``; the per-payload work is the same string algebra
+the reference runs per page.
 """
 
 from __future__ import annotations

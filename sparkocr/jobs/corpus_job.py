@@ -538,7 +538,7 @@ def increment_corpus(
     records its kind and appends replay it, so an increment can never
     drift from the signatures it is compared against."""
     from sparkocr.pipeline import caching, corpus_state
-    from sparkocr.pipeline.dedup import dedup_corpus, dup_clusters
+    from sparkocr.pipeline.dedup import cap_metrics_get, dedup_corpus, dup_clusters
     from sparkocr.pipeline.lsh_store import (
         append_lsh_store,
         incremental_lsh_pairs,
@@ -604,11 +604,16 @@ def increment_corpus(
         # "this stays 0"; a nonzero value is the observable alarm.
         # (Observation rides the novel.count() action above; with zero
         # input docs the observed subtree may be pruned before it runs,
-        # so short-circuit rather than block on an unfired observation.)
-        counts["byid_content_conflicts"] = (
-            int(fstats["after_byhash_obs"].get["n"]) - counts["novel_docs"]
+        # so short-circuit rather than block on an unfired observation.
+        # An empty metrics row — AQE pruned the observed subtree after
+        # the byhash anti-join left nothing — also means no conflicts.)
+        after_byhash = (
+            cap_metrics_get(fstats["after_byhash_obs"])
             if counts["after_exact_dedup"]
-            else 0
+            else None
+        )
+        counts["byid_content_conflicts"] = (
+            int(after_byhash["n"]) - counts["novel_docs"] if after_byhash else 0
         )
         lap("state_filter")
 

@@ -38,26 +38,31 @@ Determinism: planes are seeded; centroids come from the passed trainer
 (``ivf_centroids_kmeans`` by default — hash-ordered sample, fixed Lloyd
 iterations).
 
-The writers ``repartition`` on the partition column first, so each
-signature/cell directory holds one file per shuffle partition that owns it
-(not one file per input task x value — the small-files explosion).
+The probes reuse the operators' own bodies from ``similarity``: the probe
+keys (``_lsh_probe_sigs`` / ``_ivf_probe_cells``), the top-k tail
+(``_topk_by_cosine``) and, for ``near_dups_indexed``, the signed frame and
+bucket join (``_signed`` / ``_bucket_pairs``). Only the scan differs — a
+partition-pruned read instead of a recomputed column — so an indexed probe
+equals its recompute operator by construction.
 """
 
 from __future__ import annotations
 
-import json
 import re
 from functools import reduce
-from itertools import combinations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from sparkocr.pipeline import caching
 from sparkocr.pipeline.similarity import (
     N_PLANES,
     _SEED,
-    _as_double,
-    cosine_expr,
+    _bucket_pairs,
+    _ivf_probe_cells,
+    _lsh_probe_sigs,
+    _signed,
+    _topk_by_cosine,
     detect_dim,
     hyperplanes,
     ivf_cell_col,
@@ -112,6 +117,51 @@ def _read_meta(spark: SparkSession, path: str):
             "unreadable — the build failed mid-way, is still in progress, "
             "or the path is wrong; rebuild the index"
         ) from e
+
+
+def _open_index(spark: SparkSession, path: str, kind: str, query=None):
+    """Meta of a complete index of ``kind``; with ``query``, also checks
+    its dimension (a mismatch would otherwise die in numpy with an opaque
+    shapes-not-aligned error)."""
+    m = _read_meta(spark, path)
+    if m["kind"] != kind:
+        raise ValueError(f"index at {path} is kind={m['kind']}, expected {kind}")
+    if query is not None and len(query) != m["dim"]:
+        raise ValueError(
+            f"{kind}_topk_indexed: query dim {len(query)} != index dim {m['dim']}"
+        )
+    return m
+
+
+def _stored_planes(m) -> np.ndarray:
+    """An LSH index's planes, re-seeded from its meta (never re-derived
+    from data)."""
+    return hyperplanes(m["dim"], m["n_planes"], m["seed"])
+
+
+def _stored_centroids(spark: SparkSession, path: str) -> np.ndarray:
+    """An IVF index's persisted centroids, in cell_id order."""
+    rows = spark.read.parquet(f"{path}/centroids").orderBy("cell_id").collect()
+    return np.asarray([r["centroid"] for r in rows], dtype=np.float64)
+
+
+def _write_partitioned(df: DataFrame, pcol: str, dest: str) -> None:
+    """``repartition`` on the partition column first, so each sig=/cell=
+    directory holds one file per shuffle partition that owns it (not one
+    file per input task x value — the small-files explosion)."""
+    df.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(dest)
+
+
+def _reset_for_rebuild(spark: SparkSession, path: str) -> None:
+    """Invalidate meta/ (written last: no probe-able half-index), then
+    drop every delta and a dead compact's leftovers — a REBUILD over an
+    appended index must not leave stale deltas: the new base may
+    re-include their rows (duplicates) or carry different parameters
+    (junk partitions)."""
+    _invalidate_meta(spark, path)
+    _delete_dir(spark, f"{path}/deltas")
+    _delete_dir(spark, f"{path}/compact_pending.json")
+    _delete_dir(spark, f"{path}/vectors_compacting")
 
 
 def _check_vectors_nonempty(spark: SparkSession, path: str, builder: str) -> None:
@@ -297,18 +347,13 @@ def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
         if mk.get("append_id") == append_id:
             return {"append_id": append_id, "rows": mk.get("rows", 0), "skipped": True}
     if m["kind"] == "lsh":
-        planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-        stamped = emb.withColumn("sig", lsh_signature_col(F.col("embedding"), planes))
-        pcol = "sig"
+        pcol, stamp = "sig", lsh_signature_col(F.col("embedding"), _stored_planes(m))
     elif m["kind"] == "ivf":
-        cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell_id").collect()
-        cents = np.asarray([r["centroid"] for r in cent_rows], dtype=np.float64)
-        stamped = emb.withColumn("cell", ivf_cell_col(F.col("embedding"), cents))
-        pcol = "cell"
+        pcol, stamp = "cell", ivf_cell_col(F.col("embedding"), _stored_centroids(spark, path))
     else:
         raise ValueError(f"index at {path} has unknown kind={m['kind']}")
     dpath = _delta_path(path, append_id)
-    stamped.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(dpath)
+    _write_partitioned(emb.withColumn(pcol, stamp), pcol, dpath)
     try:
         rows = spark.read.parquet(dpath).count()  # footer-only metadata count
     except Exception as e:
@@ -429,7 +474,7 @@ def compact_index(spark: SparkSession, path: str) -> dict:
     base = spark.read.parquet(f"{path}/vectors")
     frames = [spark.read.parquet(_delta_path(path, mk["append_id"])) for mk in marks]
     merged = reduce(DataFrame.unionByName, frames, base)
-    merged.repartition(pcol).write.mode("overwrite").partitionBy(pcol).parquet(tmp_dir)
+    _write_partitioned(merged, pcol, tmp_dir)
     _write_json_atomic(
         spark, pending_path, {"meta": m.asDict(), "folded": folded}
     )
@@ -450,32 +495,11 @@ def build_lsh_index(
         dim = detect_dim(emb)
     planes = hyperplanes(dim, n_planes, seed)
     spark = emb.sparkSession
-    _invalidate_meta(spark, path)  # meta last: no probe-able half-index
-    # a REBUILD over an appended index must not leave stale deltas: the
-    # new base may re-include their rows (duplicates) or carry different
-    # parameters (junk partitions); same for a dead compact's leftovers
-    _delete_dir(spark, f"{path}/deltas")
-    _delete_dir(spark, f"{path}/compact_pending.json")
-    _delete_dir(spark, f"{path}/vectors_compacting")
+    _reset_for_rebuild(spark, path)
     sigged = emb.withColumn("sig", lsh_signature_col(F.col("embedding"), planes))
-    sigged.repartition("sig").write.mode("overwrite").partitionBy("sig").parquet(
-        f"{path}/vectors"
-    )
+    _write_partitioned(sigged, "sig", f"{path}/vectors")
     _check_vectors_nonempty(spark, path, "build_lsh_index")
     _write_meta(spark, path, kind="lsh", dim=dim, n_planes=n_planes, seed=seed)
-
-
-def _sig_ball(qsig: int, n_planes: int, hamming: int) -> list[int]:
-    """All signatures within ``hamming`` bit flips of ``qsig`` —
-    1 + C(n,1) + ... + C(n,hamming) values (79 at n=12, h=2)."""
-    out = [qsig]
-    for h in range(1, hamming + 1):
-        for bits in combinations(range(n_planes), h):
-            s = qsig
-            for b in bits:
-                s ^= 1 << b
-            out.append(s)
-    return out
 
 
 def lsh_topk_indexed(
@@ -488,39 +512,9 @@ def lsh_topk_indexed(
     """Probe a materialized LSH index: exact cosine inside the signature
     ball, reading ONLY the matching sig= partitions (partition pruning —
     the scan never touches the other directories)."""
-    m = _read_meta(spark, path)
-    if m["kind"] != "lsh":
-        raise ValueError(f"index at {path} is kind={m['kind']}, expected lsh")
-    if len(query) != m["dim"]:
-        # same caller bug ivf_topk names: without this the probe dies in
-        # np.dot with an opaque shapes-not-aligned error
-        raise ValueError(
-            f"lsh_topk_indexed: query dim {len(query)} != index dim {m['dim']}"
-        )
-    planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-    qv = np.asarray(query, dtype=float)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if float(np.dot(qv, p)) > 0:
-            qsig |= 1 << i
-    probe_sigs = _sig_ball(qsig, m["n_planes"], hamming)
-    # size==dim mirrors lsh_topk: null / wrong-dim rows are zero-filled
-    # into sig 0 at build, so a ball containing 0 would surface them as
-    # null-cosine junk whenever k exceeds the real match count
-    vecs = _scan_vectors(
-        spark,
-        path,
-        F.col("sig").isin(probe_sigs) & (F.size("embedding") == int(m["dim"])),
-    )
-    q = F.array(*[F.lit(float(v)) for v in query])
-    return (
-        vecs.select(
-            "vec_id",
-            F.round(cosine_expr(_as_double(F.col("embedding")), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    m = _open_index(spark, path, "lsh", query)
+    probe_sigs = _lsh_probe_sigs(query, _stored_planes(m), hamming)
+    return _topk_by_cosine(_scan_vectors(spark, path, F.col("sig").isin(probe_sigs)), query, k)
 
 
 def near_dups_indexed(
@@ -570,18 +564,9 @@ def near_dups_indexed(
     from sparkocr.pipeline.dedup import _require_cap, cap_hot_buckets
 
     _require_cap(bucket_max, cap_metrics)
-    m = _read_meta(spark, path)
-    if m["kind"] != "lsh":
-        raise ValueError(f"index at {path} is kind={m['kind']}, expected lsh")
-    planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
+    m = _open_index(spark, path, "lsh")
     dim = int(m["dim"])
-    from sparkocr.pipeline import caching
-
-    sig_new = caching.register(
-        new_emb.filter(F.size("embedding") == dim).withColumn(
-            "sig", lsh_signature_col(F.col("embedding"), planes)
-        )
-    )
+    sig_new = _signed(new_emb, _stored_planes(m))
     probe_sigs = [
         r["sig"]
         for r in sig_new.select("sig").distinct().limit(max_probe_sigs + 1).collect()
@@ -617,32 +602,8 @@ def near_dups_indexed(
             counts=totals, broadcast_small=True,
         )
 
-    def _pairs(a, b, strict):
-        cond = F.col("a.sig") == F.col("b.sig")
-        cond = cond & (
-            (F.col("a.vec_id") < F.col("b.vec_id"))
-            if strict
-            else (F.col("a.vec_id") != F.col("b.vec_id"))
-        )
-        return (
-            a.alias("a")
-            .join(b.alias("b"), cond)
-            .select(
-                F.least("a.vec_id", "b.vec_id").alias("id1"),
-                F.greatest("a.vec_id", "b.vec_id").alias("id2"),
-                F.round(
-                    cosine_expr(
-                        _as_double(F.col("a.embedding")),
-                        _as_double(F.col("b.embedding")),
-                    ),
-                    6,
-                ).alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-
-    new_new = _pairs(sig_new, sig_new, strict=True)
-    new_old = _pairs(sig_new, old, strict=False)
+    new_new = _bucket_pairs(sig_new, sig_new, threshold, strict=True)
+    new_old = _bucket_pairs(sig_new, old, threshold, strict=False)
     return new_new.unionByName(new_old)
 
 
@@ -657,14 +618,9 @@ def build_ivf_index(
     exact assignment."""
     cents = np.asarray(trainer(emb, n_cells), dtype=np.float64)
     spark = emb.sparkSession
-    _invalidate_meta(spark, path)  # meta last: no probe-able half-index
-    _delete_dir(spark, f"{path}/deltas")  # same rebuild hygiene as LSH
-    _delete_dir(spark, f"{path}/compact_pending.json")
-    _delete_dir(spark, f"{path}/vectors_compacting")
+    _reset_for_rebuild(spark, path)
     celled = emb.withColumn("cell", ivf_cell_col(F.col("embedding"), cents))
-    celled.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/vectors"
-    )
+    _write_partitioned(celled, "cell", f"{path}/vectors")
     # the default trainer rejects an empty table before anything is
     # written, but a custom trainer with precomputed centroids would
     # otherwise build a complete, probe-crashing empty index
@@ -685,33 +641,6 @@ def ivf_topk_indexed(
 ) -> DataFrame:
     """Probe a materialized IVF index: exact cosine inside the ``n_probe``
     cells nearest the query, reading ONLY those cell= partitions."""
-    m = _read_meta(spark, path)
-    if m["kind"] != "ivf":
-        raise ValueError(f"index at {path} is kind={m['kind']}, expected ivf")
-    if len(query) != m["dim"]:
-        raise ValueError(
-            f"ivf_topk_indexed: query dim {len(query)} != index dim {m['dim']}"
-        )
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cell_id").collect()
-    cents = np.asarray([r["centroid"] for r in cent_rows], dtype=np.float64)
-    qv = np.asarray(query, dtype=np.float64)
-    d = ((cents - qv[None, :]) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
-    # same size==dim restriction ivf_topk applies: zero-filled null /
-    # wrong-dim rows got a garbage cell at build time and would surface
-    # as null-cosine rows whenever k exceeds the matching-row count —
-    # without it the indexed and recompute probes diverge on dirty tables
-    vecs = _scan_vectors(
-        spark,
-        path,
-        F.col("cell").isin(probe) & (F.size("embedding") == int(m["dim"])),
-    )
-    q = F.array(*[F.lit(float(v)) for v in query])
-    return (
-        vecs.select(
-            "vec_id",
-            F.round(cosine_expr(_as_double(F.col("embedding")), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    _open_index(spark, path, "ivf", query)
+    probe = _ivf_probe_cells(_stored_centroids(spark, path), query, n_probe)
+    return _topk_by_cosine(_scan_vectors(spark, path, F.col("cell").isin(probe)), query, k)

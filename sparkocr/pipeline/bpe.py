@@ -199,7 +199,11 @@ def count_text(text: str | None, ranks: dict[tuple[bytes, bytes], int]) -> int |
 _WORD_CACHE: dict[str, int] = {}
 
 
-def _count_batch(texts: pd.Series, ranks) -> pd.Series:
+def _count_batch(texts: pd.Series) -> pd.Series:
+    """Default-ranks counts per text. The ranks table is not a parameter:
+    ``_WORD_CACHE`` is keyed by word alone, so it may only ever hold
+    counts from one table."""
+    ranks = load_default_ranks()
     out = []
     cache = _WORD_CACHE
     for t in texts:
@@ -229,6 +233,6 @@ def bpe_token_count_col(text_col: str = "text"):
 
     @F.pandas_udf("long")
     def _bpe_count(s: pd.Series) -> pd.Series:
-        return _count_batch(s, load_default_ranks())
+        return _count_batch(s)
 
     return _bpe_count(F.col(text_col))

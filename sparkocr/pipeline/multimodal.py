@@ -66,8 +66,9 @@ def _parse_bmp(payload: bytes):
     (row padding excluded), or ``None`` if the payload is not a valid
     BMP of this shape. STRICTNESS IS THE DISPATCH CONTRACT: the header's
     declared file size must equal the payload length and the pixel array
-    must fit exactly, so arbitrary text that happens to start with 'BM'
-    can never take this branch."""
+    must fit inside the payload from its declared offset (bytes after the
+    raster are accepted), so arbitrary text that happens to start with
+    'BM' can never take this branch."""
     import struct
 
     import numpy as np
@@ -103,7 +104,7 @@ def _parse_bmp(payload: bytes):
 
 
 def _parse_ppm(payload: bytes):
-    """Strict binary-PPM (P6, maxval <= 255) parser — same contract as
+    """Strict binary-PPM (P6, maxval <= 255) parser — stricter than
     ``_parse_bmp``: header + exactly ``w*h*3`` raster bytes, nothing
     else, or ``None``. Comments (``#`` to end of line) are allowed in
     the header per the netpbm spec."""

@@ -14,6 +14,8 @@ join.
 
 from __future__ import annotations
 
+from itertools import combinations
+
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
@@ -61,15 +63,28 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def cosine_topk(emb: DataFrame, query: list[float], k: int = 10) -> DataFrame:
-    """Brute-force top-k by cosine to a literal query vector."""
+def _topk_by_cosine(vecs: DataFrame, query: list[float], k: int) -> DataFrame:
+    """THE top-k tail of every probe, operator and materialized-index
+    alike (so indexed ≡ recompute holds by construction): rows of the
+    query's dimension only — null / wrong-dim rows are zero-filled into
+    sig 0 / a garbage cell by the bucketing UDFs and would otherwise
+    surface as null-cosine junk whenever k exceeds the matching-row
+    count — then exact cosine rounded to 6 places, ties broken by vec_id."""
     q = F.array(*[F.lit(float(v)) for v in query])
-    e = _as_double(F.col("embedding"))
     return (
-        emb.select("vec_id", F.round(cosine_expr(e, q), 6).alias("cosine"))
+        vecs.filter(F.size("embedding") == len(query))
+        .select(
+            "vec_id",
+            F.round(cosine_expr(_as_double(F.col("embedding")), q), 6).alias("cosine"),
+        )
         .orderBy(F.desc("cosine"), "vec_id")
         .limit(k)
     )
+
+
+def cosine_topk(emb: DataFrame, query: list[float], k: int = 10) -> DataFrame:
+    """Brute-force top-k by cosine to a literal query vector."""
+    return _topk_by_cosine(emb, query, k)
 
 
 def hyperplanes(dim: int = DIM, n_planes: int = N_PLANES, seed: int = _SEED) -> np.ndarray:
@@ -103,35 +118,35 @@ def lsh_signature_col(emb_col, planes: np.ndarray):
     return pandas_udf(_sig, "long")(emb_col)
 
 
+def _sig_ball(qsig: int, n_planes: int, hamming: int) -> list[int]:
+    """All signatures within ``hamming`` bit flips of ``qsig`` —
+    1 + C(n,1) + ... + C(n,hamming) values (79 at n=12, h=2)."""
+    out = [qsig]
+    for h in range(1, hamming + 1):
+        for bits in combinations(range(n_planes), h):
+            s = qsig
+            for b in bits:
+                s ^= 1 << b
+            out.append(s)
+    return out
+
+
+def _lsh_probe_sigs(query: list[float], planes: np.ndarray, hamming: int = 2) -> list[int]:
+    """The signature ball an LSH probe reads: the query's signature and
+    every signature within ``hamming`` bit flips of it."""
+    qv = np.asarray(query, dtype=float)
+    qsig = sum(1 << i for i, p in enumerate(planes) if float(np.dot(qv, p)) > 0)
+    return _sig_ball(qsig, len(planes), hamming)
+
+
 def lsh_topk(emb: DataFrame, query: list[float], k: int = 10, n_planes: int = N_PLANES) -> DataFrame:
     """IVF/LSH-style ANN: score only vectors whose signature is within
     hamming ≤ 2 of the query's signature (bucket probe), then exact cosine.
     Recall < 1 by design; the scale path for 10^9-vector tables."""
     planes = hyperplanes(len(query), n_planes)
-    qv = np.asarray(query, dtype=float)
-    qsig = 0
-    for i, p in enumerate(planes):
-        if float(np.dot(qv, p)) > 0:
-            qsig |= 1 << i
     sigged = emb.withColumn("sig", lsh_signature_col(F.col("embedding"), planes))
-    # size==dim keeps null / wrong-dim rows out of the probe: they are
-    # zero-filled into sig 0 by the signature UDF, so a ball containing 0
-    # would surface them as null-cosine junk whenever k exceeds the real
-    # match count (mirrors ivf_topk, and ann_index probes apply the same
-    # restriction so indexed ≡ recompute holds on dirty tables)
-    probe = sigged.filter(
-        (F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig))) <= 2)
-        & (F.size("embedding") == len(query))
-    )
-    q = F.array(*[F.lit(float(v)) for v in query])
-    return (
-        probe.select(
-            "vec_id",
-            F.round(cosine_expr(_as_double(F.col("embedding")), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    probe = sigged.filter(F.col("sig").isin(_lsh_probe_sigs(query, planes)))
+    return _topk_by_cosine(probe, query, k)
 
 
 def _hash_sample(emb: DataFrame, n: int, seed: int) -> DataFrame:
@@ -266,6 +281,14 @@ def ivf_cell_col(emb_col, centroids: np.ndarray):
     return pandas_udf(_cell, "int")(emb_col)
 
 
+def _ivf_probe_cells(cents: np.ndarray, query: list[float], n_probe: int) -> list[int]:
+    """The ``n_probe`` cells whose centroids are nearest the query. Stable
+    sort: duplicate centroids (first-n seeding over exact-dup embeddings)
+    tie on distance, and every probe must pick the same cells."""
+    d = ((cents - np.asarray(query, dtype=np.float64)[None, :]) ** 2).sum(axis=1)
+    return [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
+
+
 def ivf_topk(
     emb: DataFrame, query: list[float], k: int = 10,
     n_cells: int = 16, n_probe: int = 4, dim: int | None = None,
@@ -279,7 +302,6 @@ def ivf_topk(
     same table): it skips ``detect_dim``'s sample scan, leaving one
     driver-blocking job (the centroid prefix) before the probe."""
     cents = ivf_centroids(emb, n_cells, dim=dim)
-    qv = np.asarray(query, dtype=np.float64)
     if cents.shape[1] != len(query):
         # a numpy broadcast error here would surface as an opaque task
         # failure; the mismatch is a caller bug (querying a table of a
@@ -287,31 +309,9 @@ def ivf_topk(
         raise ValueError(
             f"ivf_topk: query dim {len(query)} != table majority dim {cents.shape[1]}"
         )
-    d = ((cents - qv[None, :]) ** 2).sum(axis=1)
-    # stable sort: duplicate centroids (first-n seeding over exact-dup
-    # embeddings) tie on distance, and the probe set must match
-    # ann_index.ivf_topk_indexed's cell choice bit-for-bit
-    probe = [int(i) for i in np.argsort(d, kind="stable")[:n_probe]]
     celled = emb.withColumn("cell", ivf_cell_col(F.col("embedding"), cents))
-    q = F.array(*[F.lit(float(v)) for v in query])
-    # restrict the probe to rows of the centroid dimension: null /
-    # wrong-dim rows get a garbage cell from the zero-filled projection
-    # and a null cosine from the length-mismatched zip_with — without the
-    # filter they surface as null-cosine rows whenever k exceeds the
-    # matching-row count, and an explicit dim= that matches the query but
-    # only a junk minority of the table would "succeed" on junk alone
-    return (
-        celled.filter(
-            F.col("cell").isin(probe)
-            & (F.size("embedding") == int(cents.shape[1]))
-        )
-        .select(
-            "vec_id",
-            F.round(cosine_expr(_as_double(F.col("embedding")), q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    probe = celled.filter(F.col("cell").isin(_ivf_probe_cells(cents, query, n_probe)))
+    return _topk_by_cosine(probe, query, k)
 
 
 def detect_dim(emb: DataFrame, sample_size: int = 4096, seed: int = _SEED) -> int:
@@ -334,6 +334,40 @@ def detect_dim(emb: DataFrame, sample_size: int = 4096, seed: int = _SEED) -> in
     if not rows:
         return DIM
     return _majority_dim(r["d"] for r in rows)
+
+
+def _signed(emb: DataFrame, planes: np.ndarray) -> DataFrame:
+    """Rows of the planes' dimension stamped with their signature —
+    cached: both join sides read the signatures, and the plane dot
+    products are the expensive projection; registered with caching, so
+    consumers call caching.release_all() after the action (dedup.py note)."""
+    return caching.register(
+        emb.filter(F.size("embedding") == int(planes.shape[1])).withColumn(
+            "sig", lsh_signature_col(F.col("embedding"), planes)
+        )
+    )
+
+
+def _bucket_pairs(a: DataFrame, b: DataFrame, threshold: float, strict: bool) -> DataFrame:
+    """Same-signature pairs with exact cosine ≥ threshold, as
+    ``(id1, id2, cosine)`` with id1 < id2. ``strict`` pairs each
+    unordered couple once (a self-join); otherwise every distinct-id
+    couple across the two sides is emitted."""
+    ids = (F.col("a.vec_id") < F.col("b.vec_id")) if strict else (
+        F.col("a.vec_id") != F.col("b.vec_id")
+    )
+    return (
+        a.alias("a")
+        .join(b.alias("b"), (F.col("a.sig") == F.col("b.sig")) & ids)
+        .select(
+            F.least("a.vec_id", "b.vec_id").alias("id1"),
+            F.greatest("a.vec_id", "b.vec_id").alias("id2"),
+            F.round(
+                cosine_expr(_as_double(F.col("a.embedding")), _as_double(F.col("b.embedding"))), 6
+            ).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= threshold)
+    )
 
 
 def embedding_near_dups(
@@ -364,26 +398,7 @@ def embedding_near_dups(
     _require_cap(bucket_max, cap_metrics)
     if dim is None:
         dim = detect_dim(emb)
-    planes = hyperplanes(dim, n_planes)
-    # cached: both join sides read the signatures, and the 12-plane dot
-    # products are the expensive projection; registered with caching —
-    # consumers call caching.release_all() after the action (dedup.py note)
-    sigged = caching.register(
-        emb.filter(F.size("embedding") == int(dim)).withColumn(
-            "sig", lsh_signature_col(F.col("embedding"), planes)
-        )
-    )
+    sigged = _signed(emb, hyperplanes(dim, n_planes))
     if bucket_max is not None:
         sigged = cap_hot_buckets(sigged, ["sig"], bucket_max, cap_metrics)
-    a, b = sigged.alias("a"), sigged.alias("b")
-    return (
-        a.join(b, (F.col("a.sig") == F.col("b.sig")) & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(
-            F.col("a.vec_id").alias("id1"),
-            F.col("b.vec_id").alias("id2"),
-            F.round(
-                cosine_expr(_as_double(F.col("a.embedding")), _as_double(F.col("b.embedding"))), 6
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _bucket_pairs(sigged, sigged, threshold, strict=True)

@@ -18,6 +18,8 @@ overlapping the hit.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -39,8 +41,12 @@ def _image_spans_numbered(extra_fields=None):
     + crop-path rule. ``crop_regions`` and the markdown-embed fold both
     build on it, so crop records and numbered placeholders cannot
     desynchronize (two hand-maintained copies of the filter/transform
-    would drift the moment one is edited). ``extra_fields(sp, i)`` returns
-    struct fields appended after img_idx/crop_path."""
+    would drift the moment one is edited). A pure projection of the row's
+    own spans: the markdown embeds need no join of turns back to
+    crop_regions(turns), which would run the extractor twice (two
+    MapInPandas branches of the same source) and shuffle.
+    ``extra_fields(sp, i)`` returns struct fields appended after
+    img_idx/crop_path."""
     return F.transform(
         F.filter(
             F.coalesce(F.col("spans"), F.array()),
@@ -102,15 +108,18 @@ def _replace_first(acc, search, repl):
     ).otherwise(acc)
 
 
-def _own_crops_col():
-    """Per-row crop records derived from the row's OWN spans array: image
-    spans in span order, numbered by position — identical records to
-    crop_regions (same is_image rule, same order — literally the same
-    ``_image_spans_numbered`` definition) but with NO self-join back
-    through the extraction DAG. A join of turns with crop_regions(turns)
-    would run the extractor twice (two MapInPandas branches of the same
-    source) and shuffle; this is a pure projection."""
-    return _image_spans_numbered()
+def _embed_placeholders(replacement):
+    """The markdown-embed fold: replace each ``**[图片 N]**`` placeholder
+    (N = 1-based crop order) in ``markdown_text``, first occurrence only,
+    with ``replacement(crop, N)`` — a JVM ``aggregate`` over the row's own
+    image spans, in crop order."""
+
+    def step(acc, c):
+        n = (c["img_idx"] + 1).cast("string")
+        placeholder = F.concat(F.lit("**[图片 "), n, F.lit("]**"))
+        return _replace_first(acc, placeholder, replacement(c, n))
+
+    return F.aggregate(_image_spans_numbered(), F.col("markdown_text"), step)
 
 
 def embed_crops_in_markdown(turns: DataFrame) -> DataFrame:
@@ -123,18 +132,8 @@ def embed_crops_in_markdown(turns: DataFrame) -> DataFrame:
     reference's sequential ``str.replace(..., 1)`` loop (app/utils.py:
     139-147): a payload whose OCR'd body legitimately contains the literal
     placeholder string keeps the body copy untouched."""
-    embedded = F.aggregate(
-        _own_crops_col(),
-        F.col("markdown_text"),
-        lambda acc, c: _replace_first(
-            acc,
-            F.concat(
-                F.lit("**[图片 "),
-                (c["img_idx"] + 1).cast("string"),
-                F.lit("]**"),
-            ),
-            F.concat(F.lit("![]("), c["crop_path"], F.lit(")")),
-        ),
+    embedded = _embed_placeholders(
+        lambda c, n: F.concat(F.lit("![]("), c["crop_path"], F.lit(")"))
     )
     return turns.select(
         "conv_id", "turn_idx", embedded.alias("markdown_embedded")
@@ -175,24 +174,14 @@ def embed_crops_in_markdown_b64(turns: DataFrame, media: DataFrame) -> DataFrame
     )
     j = turns.join(payloads, ["conv_id", "turn_idx"], "left")
     embedded = F.when(F.col("b64").isNull(), F.col("markdown_text")).otherwise(
-        F.aggregate(
-            _own_crops_col(),
-            F.col("markdown_text"),
-            lambda acc, c: _replace_first(
-                acc,
-                F.concat(
-                    F.lit("**[图片 "),
-                    (c["img_idx"] + 1).cast("string"),
-                    F.lit("]**"),
-                ),
-                F.concat(
-                    F.lit("\n\n![图片 "),
-                    (c["img_idx"] + 1).cast("string"),
-                    F.lit("](data:image/png;base64,"),
-                    F.col("b64"),
-                    F.lit(")\n\n"),
-                ),
-            ),
+        _embed_placeholders(
+            lambda c, n: F.concat(
+                F.lit("\n\n![图片 "),
+                n,
+                F.lit("](data:image/png;base64,"),
+                F.col("b64"),
+                F.lit(")\n\n"),
+            )
         )
     )
     return j.select("conv_id", "turn_idx", embedded.alias("markdown_embedded"))
@@ -277,59 +266,47 @@ def _match_starts(needle: str):
       the empty leading part of a zero-width match at position 0, so a
       text starting with the needle contributes offset 0 explicitly."""
     n = len(needle)
-    if any(needle[:k] == needle[-k:] for k in range(1, n)):
-        parts = F.split("clean_text", f"(?={_re_escape(needle)})", -1)
-        zero = F.struct(
-            F.array().cast("array<int>").alias("offs"), F.lit(0).alias("cum")
-        )
-        folded = F.aggregate(
-            F.slice(parts, 1, F.size(parts) - 1),
-            zero,
-            lambda acc, p: F.struct(
-                F.array_append(
-                    acc["offs"], (acc["cum"] + F.length(p)).cast("int")
-                ).alias("offs"),
-                (acc["cum"] + F.length(p)).alias("cum"),
-            ),
-            lambda acc: acc["offs"],
-        )
-        return F.when(
-            F.col("clean_text").startswith(needle),
-            F.concat(F.array(F.lit(0)), folded),
-        ).otherwise(folded)
-    lit = F.lit(needle)
-    parts = F.split("clean_text", _re_escape(needle), -1)
-    zero = F.struct(
-        F.array().cast("array<int>").alias("offs"), F.lit(0).alias("cum")
-    )
-    return F.aggregate(
+    bordered = any(needle[:k] == needle[-k:] for k in range(1, n))
+    # bordered: zero-width boundaries, nothing consumed per match
+    pattern, step = (f"(?={re.escape(needle)})", 0) if bordered else (re.escape(needle), n)
+    parts = F.split("clean_text", pattern, -1)
+    folded = F.aggregate(
         F.slice(parts, 1, F.size(parts) - 1),
-        zero,
+        F.struct(F.array().cast("array<int>").alias("offs"), F.lit(0).alias("cum")),
         lambda acc, p: F.struct(
-            F.array_append(acc["offs"], (acc["cum"] + F.length(p)).cast("int")).alias(
-                "offs"
-            ),
-            (acc["cum"] + F.length(p) + F.length(lit)).alias("cum"),
+            F.array_append(acc["offs"], (acc["cum"] + F.length(p)).cast("int")).alias("offs"),
+            (acc["cum"] + F.length(p) + step).alias("cum"),
         ),
         lambda acc: acc["offs"],
+    )
+    if not bordered:
+        return folded
+    return F.when(
+        F.col("clean_text").startswith(needle),
+        F.concat(F.array(F.lit(0)), folded),
+    ).otherwise(folded)
+
+
+def _hits(turns: DataFrame, needle: str, *carry: str) -> DataFrame:
+    """``locate``'s rows, plus the matched turn's ``carry`` columns."""
+    if not needle:
+        raise ValueError("needle must be non-empty")
+    starts = _match_starts(needle)
+    return turns.filter(F.size(starts) > 0).select(
+        "conv_id", "turn_idx", *carry, F.explode(starts).alias("match_start")
+    ).select(
+        "conv_id",
+        "turn_idx",
+        F.col("match_start").cast("int").alias("match_start"),
+        (F.col("match_start") + len(needle)).cast("int").alias("match_end"),
+        *carry,
     )
 
 
 def locate(turns: DataFrame, needle: str) -> DataFrame:
     """Q3 locate mode: every occurrence of ``needle`` in ``clean_text`` →
     (conv_id, turn_idx, match_start, match_end), 0-based offsets."""
-    if not needle:
-        raise ValueError("needle must be non-empty")
-    starts = _match_starts(needle)
-    hits = turns.filter(F.size(starts) > 0).select(
-        "conv_id", "turn_idx", F.explode(starts).alias("match_start")
-    )
-    return hits.select(
-        "conv_id",
-        "turn_idx",
-        F.col("match_start").cast("int").alias("match_start"),
-        (F.col("match_start") + len(needle)).cast("int").alias("match_end"),
-    )
+    return _hits(turns, needle)
 
 
 def locate_with_spans(turns: DataFrame, needle: str) -> DataFrame:
@@ -343,22 +320,7 @@ def locate_with_spans(turns: DataFrame, needle: str) -> DataFrame:
     overlapping span yields exactly one all-null row (explode_outer of the
     empty filtered array), one row per genuinely overlapping span
     otherwise — the same left-join-on-overlap semantics."""
-    if not needle:
-        raise ValueError("needle must be non-empty")
-    nlen = len(needle)
-    starts = _match_starts(needle)
-    hits = turns.filter(F.size(starts) > 0).select(
-        "conv_id",
-        "turn_idx",
-        "spans",
-        F.explode(starts).alias("match_start"),
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("match_start").cast("int").alias("match_start"),
-        (F.col("match_start") + nlen).cast("int").alias("match_end"),
-        "spans",
-    )
+    hits = _hits(turns, needle, "spans")
     overlapping = F.filter(
         F.coalesce(F.col("spans"), F.array()),
         lambda sp: (sp["start"] < F.col("match_end"))
@@ -374,8 +336,3 @@ def locate_with_spans(turns: DataFrame, needle: str) -> DataFrame:
         F.col("sp.label").alias("label"),
     )
 
-
-def _re_escape(s: str) -> str:
-    import re
-
-    return re.escape(s)

@@ -324,6 +324,28 @@ def test_empty_increment_commits_and_skips(spark, base_built, tmp_path):
     assert again["skipped"] is True
 
 
+def test_refetch_only_increment_reports_no_conflicts(spark, base_built, tmp_path):
+    """An increment of nothing but exact re-fetches of base docs: the
+    byhash anti-join leaves no row for the byid-conflict observation to
+    count, which must read as zero conflicts, not fail the run."""
+    from sparkocr.jobs.corpus_job import increment_corpus
+    from sparkocr.pipeline import caching
+
+    inc_in = _write(
+        spark,
+        str(tmp_path / "refetch_in.parquet"),
+        {"rf1": BASE_TEXTS["b1"], "rf3": BASE_TEXTS["b3"]},
+    )
+    c = increment_corpus(
+        spark, inc_in, str(tmp_path / "refetch_out"), STORE, "day_refetch",
+        min_words=1,
+    )
+    caching.release_all()
+    assert c["after_exact_dedup"] == 2
+    assert c["novel_docs"] == 0
+    assert c["byid_content_conflicts"] == 0
+
+
 def test_cli_increment_mode(spark, base_built, tmp_path, monkeypatch):
     """The deployment surface: ``--store --append-id`` routes main()
     into incremental mode (and --append-id without --store is refused)."""

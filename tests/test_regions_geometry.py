@@ -174,12 +174,10 @@ def test_chunk_turns(spark):
 
 
 def test_metrics(spark, turns):
-    from sparkocr.metrics import conversation_skew, job_summary, mode_metrics
+    from sparkocr.metrics import pipeline_metrics
 
-    mm = {r.tool: r for r in mode_metrics(turns).collect()}
-    assert mm["grounding"].n_turns == 3
-    assert mm["grounding"].n_truncated == 0
-    sk = conversation_skew(turns).first()
-    assert sk.n_convs == 2 and sk.n_turns_total == 3 and sk.max_conv_turns == 2
-    js = job_summary(turns, wall_sec=2.0)
-    assert js["rows_out"] == 3 and js["turns_per_sec"] == 1.5
+    pm = {r.tool: r for r in pipeline_metrics(turns).collect()}
+    g = pm["grounding"]
+    assert g.n_turns == 3 and g.n_truncated == 0
+    assert g.n_convs == 2 and g.n_turns_total == 3 and g.max_conv_turns == 2
+    assert sum(r.n_turns for r in pm.values()) == 3  # rows out

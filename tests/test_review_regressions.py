@@ -836,25 +836,6 @@ def test_dir_generation_is_atomic(tmp_path, monkeypatch):
     assert not os.path.exists(dest + ".tmp")
 
 
-def test_job_summary_zero_wall_sec(spark):
-    """wall_sec=0.0 is a legitimate quantized-clock measurement — the
-    summary must keep the timing field (turns_per_sec None) instead of
-    silently dropping both keys via the falsy-zero trap."""
-    from sparkocr.extract.dispatch import extract_turns
-    from sparkocr.metrics import job_summary
-
-    turns = extract_turns(
-        spark.createDataFrame(
-            [("c0", 0, "user", "hello world", "plain")],
-            "conv_id string, turn_idx int, role string, text string, tool string",
-        )
-    )
-    s = job_summary(turns, wall_sec=0.0)
-    assert s["wall_sec"] == 0.0 and s["turns_per_sec"] is None
-    s2 = job_summary(turns)
-    assert "wall_sec" not in s2 and "turns_per_sec" not in s2
-
-
 def test_extract_job_skips_docs_on_empty_input(spark, tmp_path, monkeypatch):
     """--docs on an empty input table: stage 1 writes no buckets, so the
     docs stage must be skipped (reading the never-created out/data would
