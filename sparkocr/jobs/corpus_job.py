@@ -545,18 +545,13 @@ def increment_corpus(
         store_signatures,
     )
 
-    # validate the id UP FRONT: 'base' would match the bootstrap commit
-    # row below and silently skip the whole increment (the LSH append's
-    # own reserved-name guard is unreachable behind that skip), and a
-    # malformed id would otherwise run the expensive extract/dedup
-    # stages before dying at the append
-    from sparkocr.pipeline.ann_index import _APPEND_ID_RE
+    from sparkocr.storage import check_append_id
 
-    if not _APPEND_ID_RE.match(append_id or "") or append_id == "base":
-        raise ValueError(
-            f"append_id {append_id!r} must match {_APPEND_ID_RE.pattern} "
-            "and not be the reserved 'base'"
-        )
+    # validate the id UP FRONT: 'base' would match the bootstrap commit
+    # row below and silently skip the whole increment, and a malformed
+    # id would otherwise run the expensive extract/dedup stages before
+    # dying at the append
+    check_append_id(append_id)
 
     counts: dict = {"append_id": append_id}
     timings: dict[str, float] = {}

@@ -69,6 +69,7 @@ from sparkocr.pipeline.similarity import (
     ivf_centroids_kmeans,
     lsh_signature_col,
 )
+from sparkocr.storage import check_append_id
 
 
 def _write_meta(spark: SparkSession, path: str, **kv) -> None:
@@ -182,7 +183,6 @@ def _check_vectors_nonempty(spark: SparkSession, path: str, builder: str) -> Non
         raise
 
 
-_APPEND_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 _COMMIT_NAME_RE = re.compile(r"^([A-Za-z0-9][A-Za-z0-9._-]{0,127})\.json$")
 
 
@@ -336,11 +336,7 @@ def append_to_index(emb: DataFrame, path: str, append_id: str) -> dict:
     quantizer — compact + rebuild periodically.
 
     Returns ``{"append_id", "rows", "skipped"}``."""
-    if not _APPEND_ID_RE.match(append_id or ""):
-        raise ValueError(
-            f"append_id {append_id!r} must match {_APPEND_ID_RE.pattern} "
-            "(it names files and directories)"
-        )
+    check_append_id(append_id)  # it names files and directories
     spark = emb.sparkSession
     m = _read_meta(spark, path)  # refuses half-built indexes by design
     for mk in _committed_appends(spark, path):

@@ -21,11 +21,11 @@ Tables (warehouse-managed, like ``lsh_store``'s):
   side — one table can only be bucketed on one key.
 - ``{store}_content_commits`` — ``(append_id, attempt, rows,
   ordinal)``: the commit log. Rows in the data tables are stamped with
-  a per-ATTEMPT token; only attempts recorded here are visible
-  (``append_lsh_store``'s discipline — a death mid-append leaves
-  invisible orphans, a retry lands exactly once, a committed retry is
-  a skipped no-op). ``ordinal`` numbers increments 1, 2, ... (base
-  build = 0) and drives per-increment pack-id namespacing.
+  a per-ATTEMPT token; only attempts recorded here are visible (a death
+  mid-append leaves invisible orphans, a retry lands exactly once, a
+  committed retry is a skipped no-op). ``ordinal`` numbers increments
+  1, 2, ... (base build = 0) and drives per-increment pack-id
+  namespacing.
 - ``{store}_content_meta`` — ``(n_buckets, content_v)``, written LAST:
   a build that dies mid-way leaves a state every reader refuses.
 
@@ -38,19 +38,16 @@ retries of a crashed increment are safe. Two increments racing the
 same store could interleave ordinals — unsupported, like concurrent
 ``append_lsh_store`` calls.
 
-Known trade: this is the third instance of the bucketed-tables-with-
-commit-log discipline (``ann_index.append_to_index`` and ``lsh_store``
-are the others). The three differ in schema, meta, and what a commit
-covers, so the shared part is the IDEA more than code — but a future
-change to the discipline itself (attempt-stamp scheme, legacy-store
-handling) must be applied in all three places; their cross-referenced
-docstrings are the map.
+The exactly-once discipline itself (stamps, commit log, meta, committed
+view) is ``storage.py``'s, shared with ``lsh_store``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from sparkocr import storage
+from sparkocr.pipeline import caching
 from sparkocr.pipeline.dedup import _dedup_key
 
 #: Version of the content-hash definition (dedup._dedup_key). Bump if
@@ -75,23 +72,13 @@ def _meta_table(store: str) -> str:
     return f"{store}_content_meta"
 
 
+_COMMIT_COLS = ["append_id", "attempt", "rows", "ordinal"]
+
+
 def read_content_meta(spark: SparkSession, store: str) -> dict:
     """State parameters, or a loud error for a half-built state (meta is
-    written last)."""
-    try:
-        row = spark.table(_meta_table(store)).first()
-    except Exception as e:
-        row = None
-        err = e
-    else:
-        err = None
-    if row is None:
-        raise ValueError(
-            f"no complete content state named {store!r}: its meta table "
-            "is missing, unreadable, or empty — the build failed mid-way "
-            "or the name is wrong; rebuild with build_content_state"
-        ) from err
-    m = {k: int(v) for k, v in row.asDict().items()}
+    written last) or one built under another content-hash version."""
+    m = storage.read_meta(spark, _meta_table(store), "build_content_state")
     if m["content_v"] != CONTENT_V:
         raise ValueError(
             f"content state {store!r} was built under hash version "
@@ -102,17 +89,15 @@ def read_content_meta(spark: SparkSession, store: str) -> dict:
 
 
 def _commits(spark: SparkSession, store: str) -> list:
-    return spark.table(_commits_table(store)).collect()
+    return storage.read_commits(
+        spark, _commits_table(store), "build_content_state"
+    )
 
 
-def _committed_rows(spark: SparkSession, store: str, table: str) -> DataFrame:
-    """The COMMITTED view of a state table (attempt-stamp filtered, stamp
-    dropped). The isin filter sits on the scan; bucketing survives."""
-    attempts = [r.attempt for r in _commits(spark, store)]
-    return (
-        spark.table(table)
-        .filter(F.col("append_id").isin(attempts))
-        .drop("append_id")
+def _stamped(docs: DataFrame, stamp: str) -> DataFrame:
+    """The state's 3-column rows for ``docs``, stamped ``stamp``."""
+    return docs.select(
+        _dedup_key().alias("content_hash"), "doc_id", F.lit(stamp).alias("append_id")
     )
 
 
@@ -124,49 +109,35 @@ def build_content_state(docs: DataFrame, store: str, n_buckets: int = 64) -> Non
     rows)."""
     spark = docs.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {_meta_table(store)}")
-    rows = docs.select(
-        _dedup_key().alias("content_hash"),
-        "doc_id",
-        F.lit("base").alias("append_id"),
-    )
-    (
-        rows.repartition(n_buckets, "content_hash")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "content_hash")
-        .sortBy("content_hash")
-        .format("parquet")
-        .saveAsTable(_byhash_table(store))
+    storage.save_bucketed(
+        _stamped(docs, "base"), _byhash_table(store), "content_hash",
+        n_buckets, "overwrite",
     )
     # derive the byid projection from reading byhash back (the text is
     # hashed once; this reads the 3-column relation, not the corpus)
-    (
-        spark.table(_byhash_table(store))
-        .select("doc_id", "content_hash", "append_id")
-        .repartition(n_buckets, "doc_id")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .format("parquet")
-        .saveAsTable(_byid_table(store))
+    storage.save_bucketed(
+        spark.table(_byhash_table(store)).select(
+            "doc_id", "content_hash", "append_id"
+        ),
+        _byid_table(store), "doc_id", n_buckets, "overwrite",
     )
     n_base = spark.table(_byhash_table(store)).count()
-    spark.createDataFrame(
-        [("base", "base", n_base, 0)],
-        ["append_id", "attempt", "rows", "ordinal"],
-    ).coalesce(1).write.mode("overwrite").saveAsTable(_commits_table(store))
-    spark.createDataFrame(
-        [(n_buckets, CONTENT_V)], ["n_buckets", "content_v"]
-    ).coalesce(1).write.mode("overwrite").saveAsTable(_meta_table(store))
+    storage.write_row(
+        spark, _commits_table(store), _COMMIT_COLS, ("base", "base", n_base, 0),
+        "overwrite",
+    )
+    storage.write_row(
+        spark, _meta_table(store), ["n_buckets", "content_v"],
+        (n_buckets, CONTENT_V), "overwrite",
+    )
 
 
 def committed_ordinal(spark: SparkSession, store: str, append_id: str):
     """The committed ordinal for ``append_id``, or None if uncommitted —
     the "has this increment already fully run?" check."""
     read_content_meta(spark, store)
-    for r in _commits(spark, store):
-        if r.append_id == append_id:
-            return int(r.ordinal)
-    return None
+    done = storage.find_commit(_commits(spark, store), append_id)
+    return None if done is None else int(done.ordinal)
 
 
 def next_ordinal(spark: SparkSession, store: str) -> int:
@@ -203,8 +174,9 @@ def filter_novel(
     caller's existing action, no extra job."""
     spark = docs.sparkSession
     read_content_meta(spark, store)
-    byhash = _committed_rows(spark, store, _byhash_table(store))
-    byid = _committed_rows(spark, store, _byid_table(store))
+    commits = _commits(spark, store)
+    byhash = storage.committed_rows(spark, _byhash_table(store), commits)
+    byid = storage.committed_rows(spark, _byid_table(store), commits)
     mid = (
         docs.withColumn("content_hash", _dedup_key())
         .join(byhash.select("content_hash"), "content_hash", "left_anti")
@@ -225,10 +197,10 @@ def _write_commit(
 ) -> None:
     """The commit row — appended LAST, in its own function so tests can
     simulate a death in the commit window."""
-    spark.createDataFrame(
-        [(append_id, attempt, n_rows, ordinal)],
-        ["append_id", "attempt", "rows", "ordinal"],
-    ).coalesce(1).write.mode("append").saveAsTable(_commits_table(store))
+    storage.write_row(
+        spark, _commits_table(store), _COMMIT_COLS,
+        (append_id, attempt, n_rows, ordinal), "append",
+    )
 
 
 def append_content_state(
@@ -237,49 +209,31 @@ def append_content_state(
     """Append an increment's exact-distinct docs to the state,
     exactly-once per ``append_id``: rows stamped per-attempt, commit row
     (with the increment's ordinal) lands last, committed retry is a
-    skipped no-op. Returns ``{"append_id", "rows", "ordinal",
-    "skipped"}``."""
-    import uuid
-
+    skipped no-op. ``append_id`` must pass ``storage.check_append_id``
+    (``'base'`` is the build's reserved id). Returns ``{"append_id",
+    "rows", "ordinal", "skipped"}``."""
+    storage.check_append_id(append_id)
     spark = docs.sparkSession
     m = read_content_meta(spark, store)
-    for r in _commits(spark, store):
-        if r.append_id == append_id:
-            return {
-                "append_id": append_id, "rows": int(r.rows),
-                "ordinal": int(r.ordinal), "skipped": True,
-            }
-    from sparkocr.pipeline import caching
-
-    attempt = f"{append_id}-{uuid.uuid4().hex[:12]}"
+    done = storage.find_commit(_commits(spark, store), append_id)
+    if done is not None:
+        return {
+            "append_id": append_id, "rows": int(done.rows),
+            "ordinal": int(done.ordinal), "skipped": True,
+        }
+    attempt = storage.new_attempt(append_id)
     # hash once, cache the tiny 3-column increment relation, and feed
     # BOTH projections (and the count) from the cache — re-reading the
     # state table filtered by attempt would scan state-sized data per
     # append. Scoped here: every consuming action happens inside.
     with caching.scope():
-        rows = caching.register(
-            docs.select(
-                _dedup_key().alias("content_hash"),
-                "doc_id",
-                F.lit(attempt).alias("append_id"),
-            )
+        rows = caching.register(_stamped(docs, attempt))
+        storage.save_bucketed(
+            rows, _byhash_table(store), "content_hash", m["n_buckets"], "append"
         )
-        (
-            rows.repartition(m["n_buckets"], "content_hash")
-            .write.mode("append")
-            .bucketBy(m["n_buckets"], "content_hash")
-            .sortBy("content_hash")
-            .format("parquet")
-            .saveAsTable(_byhash_table(store))
-        )
-        (
-            rows.select("doc_id", "content_hash", "append_id")
-            .repartition(m["n_buckets"], "doc_id")
-            .write.mode("append")
-            .bucketBy(m["n_buckets"], "doc_id")
-            .sortBy("doc_id")
-            .format("parquet")
-            .saveAsTable(_byid_table(store))
+        storage.save_bucketed(
+            rows.select("doc_id", "content_hash", "append_id"),
+            _byid_table(store), "doc_id", m["n_buckets"], "append",
         )
         n = rows.count()
     _write_commit(spark, store, append_id, attempt, n, ordinal)
@@ -296,19 +250,16 @@ def check_content_state(spark: SparkSession, store: str) -> dict:
     ``mismatched_docs`` counts doc_ids whose committed byhash/byid row
     counts differ (a broken append — rebuild)."""
     read_content_meta(spark, store)
-    byhash_all = spark.table(_byhash_table(store))
-    byid_all = spark.table(_byid_table(store))
-    attempts = [r.attempt for r in _commits(spark, store)]
-    orphans = int(
-        byhash_all.filter(~F.col("append_id").isin(attempts)).count()
-        + byid_all.filter(~F.col("append_id").isin(attempts)).count()
+    commits = _commits(spark, store)
+    orphans = storage.orphan_rows(
+        spark, [_byhash_table(store), _byid_table(store)], commits
     )
     h = (
-        _committed_rows(spark, store, _byhash_table(store))
+        storage.committed_rows(spark, _byhash_table(store), commits)
         .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_h"))
     )
     i = (
-        _committed_rows(spark, store, _byid_table(store))
+        storage.committed_rows(spark, _byid_table(store), commits)
         .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_i"))
     )
     mismatched = int(

@@ -136,31 +136,6 @@ def _require_cap(cap, cap_metrics) -> None:
         )
 
 
-def _observe_cap(
-    counts: DataFrame, n_col: str, cap: int, obs: Observation | None
-) -> DataFrame:
-    """Attach cap-drop metrics to a bucket/df-counts node.
-
-    The caps in this module silently drop hot buckets from the candidate
-    join; without a counter the resulting under-count is invisible at
-    scale. When ``obs`` (a fresh ``pyspark.sql.Observation`` — one per
-    call, Spark forbids reuse) is passed, the SAME action that consumes
-    the operator's output also materializes, at zero extra cost:
-
-    - ``capped_buckets``: how many buckets/shingles exceeded the cap
-    - ``capped_rows``: total membership of those buckets (the d in the
-      avoided d² join blow-up — the magnitude of what was dropped)
-    """
-    if obs is None:
-        return counts
-    over = F.col(n_col) > F.lit(cap)
-    return counts.observe(
-        obs,
-        F.coalesce(F.sum(F.when(over, 1)), F.lit(0)).alias("capped_buckets"),
-        F.coalesce(F.sum(F.when(over, F.col(n_col))), F.lit(0)).alias("capped_rows"),
-    )
-
-
 def cap_metrics_get(obs: Observation) -> dict | None:
     """Read a ``cap_metrics`` Observation safely.
 
@@ -194,17 +169,35 @@ def cap_hot_buckets(
     broadcast_small: bool = False,
 ) -> DataFrame:
     """THE hot-bucket cap: keep only ``df`` rows whose bucket (``keys``)
-    has ≤ ``cap`` members, with drops observable through ``obs``
-    (``_observe_cap``). ``counts`` defaults to df's own per-key counts
+    has ≤ ``cap`` members. ``counts`` defaults to df's own per-key counts
     (column ``bn``); incremental operators pass a COMBINED counts frame
     (store + increment membership) instead. ``broadcast_small`` hints
-    the kept-keys side when it is increment-sized. One definition — the
-    five cap sites (LSH bands, simhash chunks, embedding buckets full +
-    indexed, incremental band store) previously each carried a copy,
-    and the copies had already begun to drift."""
+    the kept-keys side when it is increment-sized. Every cap site in the
+    package calls this one definition: shingle df (``jaccard_pairs``),
+    LSH bands full and incremental, simhash chunks, embedding buckets
+    full and indexed.
+
+    The cap silently drops hot buckets from the candidate join; without
+    a counter the resulting under-count is invisible at scale. When
+    ``obs`` (a fresh ``pyspark.sql.Observation`` — one per call, Spark
+    forbids reuse) is passed, the SAME action that consumes the
+    operator's output also materializes, at zero extra cost:
+
+    - ``capped_buckets``: how many buckets/shingles exceeded the cap
+    - ``capped_rows``: total membership of those buckets (the d in the
+      avoided d² join blow-up — the magnitude of what was dropped)
+    """
     if counts is None:
         counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("bn"))
-    counts = _observe_cap(counts, "bn", cap, obs)
+    if obs is not None:
+        over = F.col("bn") > F.lit(cap)
+        counts = counts.observe(
+            obs,
+            F.coalesce(F.sum(F.when(over, 1)), F.lit(0)).alias("capped_buckets"),
+            F.coalesce(F.sum(F.when(over, F.col("bn"))), F.lit(0)).alias(
+                "capped_rows"
+            ),
+        )
     small = counts.filter(F.col("bn") <= cap).select(*keys)
     if broadcast_small:
         small = F.broadcast(small)
@@ -253,15 +246,9 @@ def jaccard_pairs(
     _require_cap(df_max, cap_metrics)
     sh = caching.register(shingles(docs, k))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if df_max is not None:
-        counts = _observe_cap(
-            sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")),
-            "df", df_max, cap_metrics,
-        )
-        keep = counts.filter(F.col("df") <= df_max).select("sh")
-        cand_sh = sh.join(keep, "sh", "left_semi")
-    else:
-        cand_sh = sh
+    cand_sh = (
+        sh if df_max is None else cap_hot_buckets(sh, ["sh"], df_max, cap_metrics)
+    )
     a = cand_sh.alias("a")
     b = cand_sh.alias("b")
     common = (
@@ -428,6 +415,22 @@ def minhash_signatures(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
+def band_keys(sig: DataFrame, n_perm: int, band_rows: int) -> DataFrame:
+    """(doc_id, bkey) rows, one per band: bkey = "<band_id>:<md5 of the
+    band's minhash values>". The one band-key definition: the full
+    operator (``lsh_candidate_pairs``) and the incremental store
+    (``lsh_store``) both join on it, so their band buckets agree by
+    construction, and one bucketed column carries the whole equi-join."""
+    keys = [
+        F.concat(
+            F.lit(f"{b}:"),
+            F.md5(F.concat_ws(",", *[F.col(f"mh_{b * band_rows + r}") for r in range(band_rows)])),
+        )
+        for b in range(n_perm // band_rows)
+    ]
+    return sig.select("doc_id", F.explode(F.array(*keys)).alias("bkey"))
+
+
 def lsh_candidate_pairs(
     docs: DataFrame, n_perm: int = N_PERM, band_rows: int = BAND_ROWS, k: int = SHINGLE,
     bucket_max: int = 10_000,
@@ -501,28 +504,8 @@ def lsh_candidate_pairs(
         if sigs is not None
         else caching.register(minhash_signatures(docs, n_perm, k, max_chars, hash_kind))
     )
-    n_bands = n_perm // band_rows
-    bands = sig.select(
-        "doc_id",
-        *[
-            F.md5(
-                F.concat_ws(",", *[F.col(f"mh_{b * band_rows + r}") for r in range(band_rows)])
-            ).alias(f"band_{b}")
-            for b in range(n_bands)
-        ],
-    )
-    # stack bands: (doc_id, band_id, band_hash) then self-join per bucket
-    stacked = bands.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_id"), F.col(f"band_{b}").alias("bh"))
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("e"),
-    ).select("doc_id", F.col("e.band_id").alias("band_id"), F.col("e.bh").alias("bh"))
+    # stack bands: (doc_id, bkey) then self-join per bucket
+    stacked = band_keys(sig, n_perm, band_rows)
     capped_docs = None
     if min_est is not None and bucket_max is not None:
         # the prune counts OBSERVED collisions, but a capped bucket hides
@@ -543,21 +526,18 @@ def lsh_candidate_pairs(
         # (two nc lookups on the deduped pairs, AQE-sized — capped-doc
         # membership starts at bucket_max rows, so pathological floods
         # fall back to shuffle joins on the rare path).
-        counts = stacked.groupBy("band_id", "bh").agg(
-            F.count(F.lit(1)).alias("bn")
-        )
-        hot = counts.filter(F.col("bn") > bucket_max).select("band_id", "bh")
+        counts = stacked.groupBy("bkey").agg(F.count(F.lit(1)).alias("bn"))
+        hot = counts.filter(F.col("bn") > bucket_max).select("bkey")
         any_hot = hot.limit(1).count() > 0
         if any_hot:
             capped_docs = (
-                stacked.join(F.broadcast(hot), ["band_id", "bh"], "left_semi")
+                stacked.join(F.broadcast(hot), "bkey", "left_semi")
                 .groupBy("doc_id")
                 .agg(F.count(F.lit(1)).alias("n_capped"))
             )
         if any_hot or cap_metrics is not None:
             stacked = cap_hot_buckets(
-                stacked, ["band_id", "bh"], bucket_max, cap_metrics,
-                counts=counts,
+                stacked, ["bkey"], bucket_max, cap_metrics, counts=counts
             )
         # else: the probe just proved NO bucket exceeds the cap, so the
         # semi-join against the kept-keys set is an identity — skip it
@@ -566,12 +546,11 @@ def lsh_candidate_pairs(
         # asked for no cap telemetry: with cap_metrics the Observation
         # must ride the returned plan, which requires the join.
     elif bucket_max is not None:
-        stacked = cap_hot_buckets(stacked, ["band_id", "bh"], bucket_max, cap_metrics)
+        stacked = cap_hot_buckets(stacked, ["bkey"], bucket_max, cap_metrics)
     a, b = stacked.alias("a"), stacked.alias("b")
     raw = a.join(
         b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.bh") == F.col("b.bh"))
+        (F.col("a.bkey") == F.col("b.bkey"))
         & (F.col("a.doc_id") < F.col("b.doc_id")),
     ).select(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
     if min_est is None:

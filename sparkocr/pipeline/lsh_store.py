@@ -13,22 +13,21 @@ with no corpus-sized shuffle:
                   rows) — the base build commits as append_id='base';
                   ``attempt`` is the per-invocation token stamped onto
                   that append's rows
-  {store}_meta    single row: n_perm, band_rows, k, n_buckets
-                  (written LAST — a missing meta marks a half-built
-                  store, mirroring ann_index's completeness discipline)
+  {store}_meta    single row: n_perm, band_rows, k, n_buckets, sig_v,
+                  max_chars, hash_kind (written LAST — a missing
+                  meta marks a half-built store)
 
-Appends follow ann_index.append_to_index's exactly-once discipline:
-every appended row is stamped with its ``append_id``, the commit row
-lands LAST, and readers see only rows whose append_id is committed — a
-death between the sigs and bands appends (or mid-append) leaves
-invisible orphan rows, never a half-visible increment, and a blind
-retry of a committed id is a no-op instead of a silent duplication.
-``check_lsh_store`` still audits the committed view and additionally
-counts orphan rows so crashed attempts stay observable until a rebuild
-purges them.
+Appends follow the exactly-once discipline of ``storage.py``: appended
+rows are stamped per attempt, the commit row lands LAST, and readers see
+only committed rows — a death between the sigs and bands appends (or
+mid-append) leaves invisible orphan rows, never a half-visible
+increment, and a blind retry of a committed id is a no-op instead of a
+silent duplication. ``check_lsh_store`` audits the committed view and
+also counts orphan rows, so crashed attempts stay observable until a
+rebuild purges them.
 
-Both tables are Spark native bucketed tables (``storage.py`` pattern —
-the Parquet stand-in for Iceberg ``bucket(...)``): hash-partitioned on
+Both tables are Spark native bucketed tables (``storage.save_bucketed``
+— the Parquet stand-in for Iceberg ``bucket(...)``): hash-partitioned on
 their join keys at write time, so the increment-side joins below read
 them with NO Exchange on the store side. Per-increment cost is one
 columnar scan of each store table (two thin string columns, not the
@@ -58,6 +57,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from sparkocr import storage
 from sparkocr.pipeline import caching
 from sparkocr.pipeline.dedup import (
     BAND_ROWS,
@@ -66,6 +66,7 @@ from sparkocr.pipeline.dedup import (
     N_PERM,
     SHINGLE,
     _require_cap,
+    band_keys,
     cap_hot_buckets,
     check_band_divisibility,
     est_jaccard_col,
@@ -94,13 +95,14 @@ def _meta_hash_kind(m: dict) -> str:
 _HASH_KIND_CODE = {"md5": 0, "rolling": 1}
 
 
-def _require_sig_v(m: dict, store: str) -> None:
-    """Refuse to recompute signatures against a store built with a
-    different signature algorithm (meta ``sig_v`` vs the running
-    engine's ``dedup.MH_SIG_V``): mixed-algorithm signatures never
-    collide, so the join would silently drop every cross-increment
+def _recompute_meta(spark: SparkSession, store: str) -> dict:
+    """The store's meta for a path that recomputes signatures, refusing a
+    store built with a different signature algorithm (meta ``sig_v`` vs
+    the running engine's ``dedup.MH_SIG_V``): mixed-algorithm signatures
+    never collide, so the join would silently drop every cross-increment
     candidate pair instead of failing. Stores from before the version
     column default to 1."""
+    m = read_store_meta(spark, store)
     stored = m.get("sig_v", 1)
     if stored != MH_SIG_V:
         raise ValueError(
@@ -108,6 +110,7 @@ def _require_sig_v(m: dict, store: str) -> None:
             f"v{stored}, but this engine computes v{MH_SIG_V} — rebuild "
             "with build_lsh_store before appending or mining increments"
         )
+    return m
 
 
 def _sigs_table(store: str) -> str:
@@ -126,93 +129,16 @@ def _commits_table(store: str) -> str:
     return f"{store}_commits"
 
 
-def _committed_ids(spark: SparkSession, store: str) -> list[str] | None:
-    """Committed ATTEMPT tokens (the values stamped onto rows), or None
-    for a legacy store (built before the commit discipline: no commits
-    table, rows unstamped) — readers then take every row, exactly as the
-    old code did. Rows are stamped per-ATTEMPT rather than per-append_id
-    so a retry of a crashed append cannot accidentally commit the dead
-    attempt's rows along with its own.
-
-    Only a MISSING commits table means "legacy": the existence check is
-    explicit, so a transient read failure (metastore hiccup, permission,
-    concurrent DDL) propagates instead of being misdiagnosed as a
-    half-migrated store — the old blanket ``except`` turned a retryable
-    error into a 'rebuild the store' instruction (and made
-    ``_orphan_rows`` count every committed row as an orphan)."""
-    if not spark.catalog.tableExists(_commits_table(store)):
-        return None
-    return [r.attempt for r in spark.table(_commits_table(store)).collect()]
+_COMMIT_COLS = ["append_id", "attempt", "rows"]
 
 
-def _committed_rows(spark: SparkSession, store: str, table: str) -> DataFrame:
-    """The COMMITTED view of a store table: rows whose append_id has a
-    commit row, with the stamp column dropped so downstream plans are
-    unchanged. The isin filter sits on the scan (no Exchange added;
-    bucketing survives a Filter), and the committed-id list is one tiny
-    driver-side read — bounded by the number of appends ever run."""
-    df = spark.table(table)
-    if "append_id" not in df.columns:
-        return df  # legacy store: everything visible
-    ids = _committed_ids(spark, store)
-    if ids is None:
-        # stamped rows but no commits table: half-migrated store —
-        # refuse, a guess either way silently changes the pair set
-        raise ValueError(
-            f"LSH store {store!r} has stamped rows but no commits table — "
-            "rebuild with build_lsh_store"
-        )
-    return df.filter(F.col("append_id").isin(ids)).drop("append_id")
-
-
-def _band_keys(sig: DataFrame, n_perm: int, band_rows: int) -> DataFrame:
-    """(doc_id, bkey) rows, one per band: bkey = "<band_id>:<md5 of the
-    band's minhash values>" — the single-column form of
-    ``lsh_candidate_pairs``' (band_id, bh) join key, so one bucketed
-    column carries the whole equi-join."""
-    n_bands = n_perm // band_rows
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.concat(
-                        F.lit(f"{b}:"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"mh_{b * band_rows + r}")
-                                    for r in range(band_rows)
-                                ],
-                            )
-                        ),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bkey"),
-    )
+def _commits(spark: SparkSession, store: str) -> list:
+    return storage.read_commits(spark, _commits_table(store), "build_lsh_store")
 
 
 def read_store_meta(spark: SparkSession, store: str) -> dict:
-    """Store parameters, or a loud error for a half-built store (meta is
-    written last, so a missing — or registered-but-EMPTY — meta table
-    means a build died mid-way)."""
-    try:
-        row = spark.table(_meta_table(store)).first()
-    except Exception as e:
-        row = None
-        err = e
-    else:
-        err = None
-    if row is None:
-        raise ValueError(
-            f"no complete LSH store named {store!r}: its meta table is "
-            "missing, unreadable, or empty — the build failed mid-way or "
-            "the name is wrong; rebuild with build_lsh_store"
-        ) from err
-    return {k: int(v) for k, v in row.asDict().items()}
+    """Store parameters, or a loud error for a half-built store."""
+    return storage.read_meta(spark, _meta_table(store), "build_lsh_store")
 
 
 def build_lsh_store(
@@ -249,46 +175,33 @@ def build_lsh_store(
         raise ValueError(f"unknown minhash hash_kind {hash_kind!r}")
     spark = docs.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {_meta_table(store)}")
-    (
-        (
-            sigs
-            if sigs is not None
-            else minhash_signatures(docs, n_perm, k, max_chars, hash_kind)
-        )
-        .withColumn("append_id", F.lit("base"))
-        .repartition(n_buckets, "doc_id")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .format("parquet")
-        .saveAsTable(_sigs_table(store))
+    if sigs is None:
+        sigs = minhash_signatures(docs, n_perm, k, max_chars, hash_kind)
+    storage.save_bucketed(
+        sigs.withColumn("append_id", F.lit("base")),
+        _sigs_table(store), "doc_id", n_buckets, "overwrite",
     )
-    (
-        _band_keys(
-            spark.table(_sigs_table(store)).drop("append_id"),
-            n_perm,
-            band_rows,
-        )
-        .withColumn("append_id", F.lit("base"))
-        .repartition(n_buckets, "bkey")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "bkey")
-        .sortBy("bkey")
-        .format("parquet")
-        .saveAsTable(_bands_table(store))
+    storage.save_bucketed(
+        band_keys(
+            spark.table(_sigs_table(store)).drop("append_id"), n_perm, band_rows
+        ).withColumn("append_id", F.lit("base")),
+        _bands_table(store), "bkey", n_buckets, "overwrite",
     )
     n_base = spark.table(_sigs_table(store)).count()
-    spark.createDataFrame(
-        [("base", "base", n_base)], ["append_id", "attempt", "rows"]
-    ).coalesce(1).write.mode("overwrite").saveAsTable(_commits_table(store))
-    spark.createDataFrame(
-        # meta is an all-int row (read_store_meta int-casts every field):
-        # max_chars=None (uncapped) encodes as 0, hash_kind as its code
-        [(n_perm, band_rows, k, n_buckets, MH_SIG_V, max_chars or 0,
-          _HASH_KIND_CODE[hash_kind])],
+    storage.write_row(
+        spark, _commits_table(store), _COMMIT_COLS, ("base", "base", n_base),
+        "overwrite",
+    )
+    # meta is an all-int row (read_meta int-casts every field):
+    # max_chars=None (uncapped) encodes as 0, hash_kind as its code
+    storage.write_row(
+        spark, _meta_table(store),
         ["n_perm", "band_rows", "k", "n_buckets", "sig_v", "max_chars",
          "hash_kind"],
-    ).coalesce(1).write.mode("overwrite").saveAsTable(_meta_table(store))
+        (n_perm, band_rows, k, n_buckets, MH_SIG_V, max_chars or 0,
+         _HASH_KIND_CODE[hash_kind]),
+        "overwrite",
+    )
 
 
 def store_signatures(docs: DataFrame, store: str) -> DataFrame:
@@ -299,9 +212,10 @@ def store_signatures(docs: DataFrame, store: str) -> DataFrame:
     via their ``sigs=`` parameter: the signature pass is the increment's
     dominant compute at corpus scale, and the default paths pay it
     twice."""
-    spark = docs.sparkSession
-    m = read_store_meta(spark, store)
-    _require_sig_v(m, store)
+    return _signatures(docs, _recompute_meta(docs.sparkSession, store))
+
+
+def _signatures(docs: DataFrame, m: dict) -> DataFrame:
     return minhash_signatures(
         docs, m["n_perm"], m["k"], _meta_max_chars(m), _meta_hash_kind(m)
     )
@@ -316,20 +230,14 @@ def append_lsh_store(
 ) -> dict:
     """Append an increment's signatures and band keys to the store, with
     the STORED parameters (never re-derived). Exactly-once per
-    ``append_id`` (ann_index.append_to_index's discipline): appended rows
-    are stamped with the id, the commit row lands LAST, and readers see
+    ``append_id`` (``storage.py``'s discipline): appended rows
+    are stamped per attempt, the commit row lands LAST, and readers see
     only committed ids — so a death between the two appends (or
     mid-append) leaves invisible orphan rows rather than docs with
     signatures but no bands, a retry of the crashed id appends fresh
     rows and commits them (the orphans stay invisible; ``check_lsh_store``
     counts them, a rebuild purges them), and a blind retry of a
     COMMITTED id is a skipped no-op instead of a silent duplication.
-
-    Rows are stamped with a per-ATTEMPT token (``append_id-<nonce>``),
-    not the bare append_id, and the commit row records which attempt
-    completed — otherwise a retry's commit would resurrect the crashed
-    attempt's orphan rows (same stamp) and every increment doc would
-    surface twice.
 
     ``sigs``: optionally the increment's ``store_signatures`` output,
     computed once by a caller that also runs ``incremental_lsh_pairs``
@@ -351,84 +259,44 @@ def append_lsh_store(
     Returns ``{"append_id", "rows", "skipped", "n_existing"}`` —
     ``rows`` counts what was actually appended, ``n_existing`` what the
     guard excluded."""
-    import uuid
-
-    from sparkocr.pipeline.ann_index import _APPEND_ID_RE
-
-    if not _APPEND_ID_RE.match(append_id or "") or append_id == "base":
-        raise ValueError(
-            f"append_id {append_id!r} must match {_APPEND_ID_RE.pattern} "
-            "and not be the reserved 'base'"
-        )
+    storage.check_append_id(append_id)
     spark = new_docs.sparkSession
-    m = read_store_meta(spark, store)
-    _require_sig_v(m, store)
-    if "append_id" not in spark.table(_sigs_table(store)).columns:
-        raise ValueError(
-            f"LSH store {store!r} predates the append-commit discipline "
-            "(rows are unstamped) — rebuild with build_lsh_store before "
-            "appending"
-        )
-    if not spark.catalog.tableExists(_commits_table(store)):
-        # same half-migrated state every reader path refuses: stamped
-        # rows (checked above) but the commits table is gone — a raw
-        # TABLE_OR_VIEW_NOT_FOUND here would name neither the store nor
-        # the remedy
-        raise ValueError(
-            f"LSH store {store!r} has stamped rows but no commits table "
-            "— rebuild with build_lsh_store before appending"
-        )
-    for r in spark.table(_commits_table(store)).collect():
-        if r.append_id == append_id:
-            return {"append_id": append_id, "rows": int(r.rows), "skipped": True}
-    attempt = f"{append_id}-{uuid.uuid4().hex[:12]}"
+    m = _recompute_meta(spark, store)
+    commits = _commits(spark, store)
+    done = storage.find_commit(commits, append_id)
+    if done is not None:
+        return {"append_id": append_id, "rows": int(done.rows), "skipped": True}
+    attempt = storage.new_attempt(append_id)
     # every consuming action happens inside this function, so the
     # signature cache is scoped here instead of leaking to the caller's
     # release (a daily driver looping appends would otherwise accumulate
     # one materialized cache per day)
     with caching.scope():
-        sig = (
-            sigs
-            if sigs is not None
-            else caching.register(
-                minhash_signatures(
-                    new_docs, m["n_perm"], m["k"], _meta_max_chars(m),
-                    _meta_hash_kind(m),
-                )
-            )
-        )
+        sig = sigs if sigs is not None else caching.register(_signatures(new_docs, m))
         n_existing = 0
         if skip_existing:
-            existing = _committed_rows(
-                spark, store, _sigs_table(store)
+            existing = storage.committed_rows(
+                spark, _sigs_table(store), commits
             ).select("doc_id")
             n_before = sig.count()
             sig = caching.register(sig.join(existing, "doc_id", "left_anti"))
             n_existing = n_before - sig.count()
-        (
-            sig.withColumn("append_id", F.lit(attempt))
-            .repartition(m["n_buckets"], "doc_id")
-            .write.mode("append")
-            .bucketBy(m["n_buckets"], "doc_id")
-            .sortBy("doc_id")
-            .format("parquet")
-            .saveAsTable(_sigs_table(store))
+        storage.save_bucketed(
+            sig.withColumn("append_id", F.lit(attempt)),
+            _sigs_table(store), "doc_id", m["n_buckets"], "append",
         )
-        (
-            _band_keys(sig, m["n_perm"], m["band_rows"])
-            .withColumn("append_id", F.lit(attempt))
-            .repartition(m["n_buckets"], "bkey")
-            .write.mode("append")
-            .bucketBy(m["n_buckets"], "bkey")
-            .sortBy("bkey")
-            .format("parquet")
-            .saveAsTable(_bands_table(store))
+        storage.save_bucketed(
+            band_keys(sig, m["n_perm"], m["band_rows"]).withColumn(
+                "append_id", F.lit(attempt)
+            ),
+            _bands_table(store), "bkey", m["n_buckets"], "append",
         )
         rows = sig.count()
     # the COMMIT: one tiny row, written only after both appends landed
-    spark.createDataFrame(
-        [(append_id, attempt, rows)], ["append_id", "attempt", "rows"]
-    ).coalesce(1).write.mode("append").saveAsTable(_commits_table(store))
+    storage.write_row(
+        spark, _commits_table(store), _COMMIT_COLS, (append_id, attempt, rows),
+        "append",
+    )
     return {
         "append_id": append_id, "rows": rows, "skipped": False,
         "n_existing": n_existing,
@@ -456,8 +324,9 @@ def check_lsh_store(spark: SparkSession, store: str) -> dict:
       expected aftermath of a crash + successful retry."""
     m = read_store_meta(spark, store)
     n_bands = m["n_perm"] // m["band_rows"]
-    sigs = _committed_rows(spark, store, _sigs_table(store))
-    bands = _committed_rows(spark, store, _bands_table(store))
+    commits = _commits(spark, store)
+    sigs = storage.committed_rows(spark, _sigs_table(store), commits)
+    bands = storage.committed_rows(spark, _bands_table(store), commits)
     sig_counts = sigs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sig"))
     band_counts = bands.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_band"))
     joined = sig_counts.join(band_counts, "doc_id", "full_outer").select(
@@ -475,25 +344,10 @@ def check_lsh_store(spark: SparkSession, store: str) -> dict:
         ).alias("band_mismatch_docs"),
     ).first()
     out = {k: int(v) for k, v in row.asDict().items()}
-    out["orphan_rows"] = _orphan_rows(spark, store)
-    return out
-
-
-def _orphan_rows(spark: SparkSession, store: str) -> int:
-    """Total UNcommitted rows across both store tables (0 for a legacy
-    unstamped store, where the concept does not exist). A store with
-    only ONE stamped table (manual surgery / half migration) still has
-    its stamped side audited — the old mid-loop early return threw away
-    the sigs count whenever just the bands table was unstamped. The
-    committed-id list is collected once for both tables."""
-    dfs = [spark.table(t) for t in (_sigs_table(store), _bands_table(store))]
-    stamped = [df for df in dfs if "append_id" in df.columns]
-    if not stamped:
-        return 0
-    ids = _committed_ids(spark, store) or []
-    return sum(
-        df.filter(~F.col("append_id").isin(ids)).count() for df in stamped
+    out["orphan_rows"] = storage.orphan_rows(
+        spark, [_sigs_table(store), _bands_table(store)], commits
     )
+    return out
 
 
 def incremental_lsh_pairs(
@@ -557,8 +411,7 @@ def incremental_lsh_pairs(
     ≡ the full operator's min_est output restricted to new-touching
     pairs."""
     spark = new_docs.sparkSession
-    m = read_store_meta(spark, store)
-    _require_sig_v(m, store)
+    m = _recompute_meta(spark, store)
     _require_cap(bucket_max, cap_metrics)
     n_perm = m["n_perm"]
     # signature columns ride along with the band keys (the increment is
@@ -566,20 +419,12 @@ def incremental_lsh_pairs(
     # and new-old pairs need only one store-sigs join for the old side.
     # A caller that also appends this increment passes sigs= (its own
     # cached store_signatures frame) so the signature pass runs once.
-    sig_new = (
-        sigs
-        if sigs is not None
-        else caching.register(
-            minhash_signatures(
-                new_docs, n_perm, m["k"], _meta_max_chars(m),
-                _meta_hash_kind(m),
-            )
-        )
-    )
-    bands_new = _band_keys(sig_new, n_perm, m["band_rows"]).join(sig_new, "doc_id")
+    sig_new = sigs if sigs is not None else caching.register(_signatures(new_docs, m))
+    bands_new = band_keys(sig_new, n_perm, m["band_rows"]).join(sig_new, "doc_id")
 
     new_ids = sig_new.select("doc_id")
-    store_bands = _committed_rows(spark, store, _bands_table(store)).join(
+    commits = _commits(spark, store)
+    store_bands = storage.committed_rows(spark, _bands_table(store), commits).join(
         F.broadcast(new_ids), "doc_id", "left_anti"
     )
     carry_capped = min_est is not None and bucket_max is not None
@@ -666,7 +511,7 @@ def incremental_lsh_pairs(
             .select("id1", "id2", est)
         )
 
-    old_sigs = _committed_rows(spark, store, _sigs_table(store)).select(
+    old_sigs = storage.committed_rows(spark, _sigs_table(store), commits).select(
         "doc_id", *ys
     )
     no_pre = bands_new.select(F.col("doc_id").alias("new_id"), "bkey", *xs, *nc).join(

@@ -279,6 +279,54 @@ def test_half_built_store_refused(spark, docs):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_content_state_refusals(spark, docs):
+    """The content state follows the LSH store's validity rule: a
+    missing or empty meta table and a missing commit log each get the
+    guided rebuild error, and append_content_state refuses the reserved
+    'base' id and malformed ids itself, before touching any table."""
+    from sparkocr.pipeline import caching
+    from sparkocr.pipeline.corpus_state import (
+        append_content_state,
+        build_content_state,
+        check_content_state,
+        filter_novel,
+    )
+
+    name = "content_state_refusals"
+    inc = docs.limit(5)
+    try:
+        build_content_state(docs.limit(50), name, n_buckets=4)
+        for bad in ("base", "day 1"):
+            with pytest.raises(ValueError, match="append_id"):
+                append_content_state(inc, name, bad, 1)
+        assert check_content_state(spark, name)["orphan_rows"] == 0
+
+        schema = spark.table(f"{name}_content_meta").schema
+        spark.sql(f"DROP TABLE {name}_content_meta")
+        spark.createDataFrame([], schema).write.saveAsTable(
+            f"{name}_content_meta"
+        )
+        with pytest.raises(ValueError, match="rebuild"):
+            filter_novel(inc, name)
+
+        spark.sql(f"DROP TABLE {name}_content_meta")
+        with pytest.raises(ValueError, match="rebuild"):
+            append_content_state(inc, name, "day1", 1)
+
+        build_content_state(docs.limit(50), name, n_buckets=4)
+        spark.sql(f"DROP TABLE {name}_content_commits")
+        with pytest.raises(ValueError, match="rebuild"):
+            filter_novel(inc, name)
+        with pytest.raises(ValueError, match="rebuild"):
+            append_content_state(inc, name, "day1", 1)
+        with pytest.raises(ValueError, match="rebuild"):
+            check_content_state(spark, name)
+    finally:
+        caching.release_all()
+        for t in ("byhash", "byid", "commits", "meta"):
+            spark.sql(f"DROP TABLE IF EXISTS {name}_content_{t}")
+
+
 def test_precomputed_sigs_path_matches_default(spark, docs, store):
     """sigs= (one shared store_signatures frame for append + pairs, the
     compute-once seam increment jobs use) must be result-identical to
